@@ -22,6 +22,16 @@ The engine is organised as:
 - ``streaming``  — Structured Streaming ports (file-source ingestion
                    with Trigger.AvailableNow, windowed aggs, stateful).
 - ``plans``      — plan-inspection helpers (pushdown/broadcast asserts).
+- ``worker_imports`` — keeps Spark Python workers from re-reading
+                   unchanged zip archives before every task.
 """
 
 __version__ = "0.1.0"
+
+# A Spark worker imports the package when it unpickles an engine kernel;
+# from then on its per-task import-cache invalidation skips unchanged
+# archives (see worker_imports). A no-op on the driver.
+from aws_etl_global_footprint_network_spark.worker_imports import install_in_worker
+
+install_in_worker()
+del install_in_worker

@@ -47,6 +47,7 @@ from aws_etl_global_footprint_network_spark.functions.cache import CacheScope
 from aws_etl_global_footprint_network_spark.functions.compat import round_compat
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import read_testdata, spread
+from aws_etl_global_footprint_network_spark.worker_imports import kernel
 
 JACCARD_THRESHOLD = 0.2
 NGRAM_THRESHOLD = 0.2
@@ -176,6 +177,7 @@ def _minhash_sig_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     A = np.asarray(MINHASH_A, dtype=np.int64)
     B = np.asarray(MINHASH_B, dtype=np.int64)
 
+    @kernel
     def fn(it):
         pat = re.compile("[^a-z0-9]+")
         for pdf in it:
@@ -425,6 +427,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import re
 
+    @kernel
     def fn(it):
         pat = re.compile("[^a-z0-9]+")
         shifts = np.arange(SIMHASH_BITS, dtype=np.int64)

@@ -5,9 +5,9 @@ Reference lifecycle: glob per-year JSON -> Polars read+concat ->
 rename camelCase -> DuckDB CREATE+TRUNCATE+INSERT (positional) ->
 verification queries. Spark-first equivalents:
 
-- one ``spark.read.json`` over a glob replaces the per-file loop and
-  eager concat (S2+S3): the file list is distributed, not a driver
-  loop, and an explicit schema avoids an inference pass.
+- one ``spark.read.json`` over the globbed files replaces the per-file
+  loop and eager concat (S2+S3): the file list is distributed, not a
+  driver loop, and an explicit schema avoids an inference pass.
 - rename map applied via ``withColumnsRenamed`` (D6).
 - ``write.mode("overwrite").saveAsTable`` replaces
   CREATE IF NOT EXISTS + TRUNCATE + INSERT (S6/D1/D2) — and is
@@ -50,13 +50,16 @@ def extract_and_transform(spark: SparkSession, raw_glob: str) -> DataFrame | Non
     """Read all raw-zone JSON (array-of-records per year file) and
     normalise to the warehouse schema. Returns None for an empty raw
     zone (the reference's *intended* behaviour)."""
-    if not glob(raw_glob):
+    files = sorted(glob(raw_glob))
+    if not files:
         logger.warning("no raw files match %s", raw_glob)
         return None
+    # The matched files, not the glob: a single glob path makes Spark
+    # probe ``<glob>/_spark_metadata`` and log a FileNotFoundException.
     df = (
         spark.read.schema(CARBON_RAW_SCHEMA)
         .option("multiLine", True)
-        .json(raw_glob)
+        .json(files)
     )
     renamed = df.withColumnsRenamed(CARBON_COLUMN_MAPPING)
     # Name-based projection to the DDL order; a reordered source file

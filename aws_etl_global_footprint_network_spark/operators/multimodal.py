@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import read_testdata
+from aws_etl_global_footprint_network_spark.worker_imports import kernel
 
 FEATURE_DIM = 8
 
@@ -162,6 +163,7 @@ def synthesize_image_payloads(media: DataFrame, every: int = 4) -> DataFrame:
     a deterministic, codec-free image corpus so the decode path runs
     on genuine image bytes. Map-only (mapInPandas), no shuffle."""
 
+    @kernel
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads, types, sizes = [], [], []
@@ -196,6 +198,7 @@ def extract_features(media: DataFrame) -> DataFrame:
     partitions; swap ``byte_features`` for a pixel/codec featurizer in
     a deployment that ships codec libraries."""
 
+    @kernel
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             decoded = [decode_image_header(bytes(b)) for b in pdf["payload"]]
@@ -229,6 +232,7 @@ def extract_headers(media: DataFrame) -> DataFrame:
     dropping it here cut multimodal_features ~2.5x at sf1 (the
     remaining cost is the genuine PNG synth + header parse)."""
 
+    @kernel
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             decoded = [decode_image_header(bytes(b)) for b in pdf["payload"]]
@@ -393,6 +397,7 @@ def grouped_pandas_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~2k rows per bucket; parquet count-star is metadata-only.
     n_buckets = max(32, ev.count() // 2048 + 1)
 
+    @kernel
     def rank_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 

@@ -47,6 +47,7 @@ from aws_etl_global_footprint_network_spark.operators.multimodal import (
 )
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import read_testdata
+from aws_etl_global_footprint_network_spark.worker_imports import kernel
 
 # --------------------------------------------------------------------
 # PNG: real decode (inflate + unfilter), nearest-neighbor resize,
@@ -167,6 +168,7 @@ def resize_thumbnails(media: DataFrame) -> DataFrame:
     nearest-neighbor, and emit the thumbnail's pixel sum (content
     witness) plus dimensions. Map-only mapInPandas."""
 
+    @kernel
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {k: [] for k in THUMB_SCHEMA.fieldNames()}
@@ -264,6 +266,7 @@ def synthesize_audio_payloads(documents: DataFrame) -> DataFrame:
     16-bit PCM samples ((byte - 64) * 256) at a doc_id-derived sample
     rate — real WAV files, reproducible by the oracle from the text."""
 
+    @kernel
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = []
@@ -285,6 +288,7 @@ def extract_audio_features(audio: DataFrame) -> DataFrame:
     PCM samples with numpy: energy (exact integer sum of squares) and
     peak amplitude. Map-only."""
 
+    @kernel
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {k: [] for k in AUDIO_FEATURES_SCHEMA.fieldNames()}
@@ -402,6 +406,7 @@ def demux_frames(payload: bytes) -> tuple[int, int, int, list[bytes]]:
 
 
 def synthesize_video_payloads(documents: DataFrame) -> DataFrame:
+    @kernel
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = [
@@ -421,6 +426,7 @@ def sample_frames(videos: DataFrame, stride: int = FRAME_STRIDE) -> DataFrame:
     feature extraction). Frame decode is the real PNG decoder; output
     is one row per sampled frame with the decoded pixel sum."""
 
+    @kernel
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {k: [] for k in FRAME_SCHEMA.fieldNames()}
@@ -492,6 +498,7 @@ def average_hash(media: DataFrame) -> DataFrame:
     the downsampled mean (compared in integers: n_pixels * p > total,
     no float mean). Map-only mapInPandas."""
 
+    @kernel
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         n_px = AH_W * AH_H
         for pdf in batches:

@@ -33,10 +33,12 @@ from pyspark.sql import functions as F
 
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import read_testdata, spread
+from aws_etl_global_footprint_network_spark.worker_imports import kernel
 
 _CAND_SCHEMA = "p_partkey bigint, p_retailprice double, p_size int"
 
 
+@kernel
 def _local_frontier(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Per-batch skyline superset: after sorting by (price, size), a
     row can only be dominated by a predecessor, and any dominating

@@ -37,6 +37,7 @@ from aws_etl_global_footprint_network_spark.functions.hashing import (
 )
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import read_testdata, spread
+from aws_etl_global_footprint_network_spark.worker_imports import kernel
 
 DIM = 64
 # Sign-random-projection geometry, designed for the NEAR-DUPLICATE
@@ -527,6 +528,7 @@ def _band_bucket_frame(emb: DataFrame, extra: int) -> DataFrame:
         [[HYPERPLANES_POOL[p][i] for p in needed] for i in range(DIM)]
     )
 
+    @kernel
     def project(it):
         for pdf in it:
             n = len(pdf)
@@ -1080,6 +1082,7 @@ def ivf_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         """One partials pass: natural-label grouping when ``carr`` is
         None, else argmin assignment against the rounded centroids."""
 
+        @kernel
         def fn(it):
             lsum: dict[int, np.ndarray] = {}
             lcnt: dict[int, int] = {}

@@ -52,6 +52,7 @@ from aws_etl_global_footprint_network_spark.sources.readers import (
     read_testdata,
     spread,
 )
+from aws_etl_global_footprint_network_spark.worker_imports import kernel
 
 DIM = 64
 # Geometry: 16 subspaces x 4 dims, 16 codes each -> 16 x 4 bits = one
@@ -307,6 +308,7 @@ def _train_np(spark: SparkSession, sf_dir: str, with_labels: bool = False):
 
     cols = ["label", "embedding"] if with_labels else ["embedding"]
 
+    @kernel
     def part_fn(it):
         from pyspark import TaskContext
 
@@ -537,6 +539,7 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_m = _cb1_per_m(codes0, cb1, present)
     half = M // 2
 
+    @kernel
     def encode(it):
         for pdf in it:
             n = len(pdf)
@@ -645,6 +648,7 @@ def _adc_kernel(per_m, qids, lut, r, with_exact, head, probes=None, labels=None,
     query only scores vectors whose label is in its probe list."""
     nq = len(qids)
 
+    @kernel
     def fn(it):
         for pdf in it:
             n = len(pdf)

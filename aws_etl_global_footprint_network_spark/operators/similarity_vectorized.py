@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 from aws_etl_global_footprint_network_spark.functions.compat import round_compat
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import read_testdata, spread
+from aws_etl_global_footprint_network_spark.worker_imports import kernel
 
 TOPK = 5
 N_QUERIES = 10
@@ -64,6 +65,7 @@ def topk_vectorized(
     )
 
     @F.pandas_udf(out_type)
+    @kernel
     def scores(emb: pd.Series) -> pd.Series:
         m = np.asarray(emb.tolist(), dtype=np.float64)
         m /= np.linalg.norm(m, axis=1, keepdims=True)
@@ -249,6 +251,7 @@ def matryoshka_topk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         if (i + 1) in dims:
             qnrm[i + 1] = np.sqrt(qsq)
 
+    @kernel
     def scores(it):
         for pdf in it:
             n = len(pdf)

@@ -36,6 +36,7 @@ from aws_etl_global_footprint_network_spark.functions.compat import round_compat
 from aws_etl_global_footprint_network_spark.functions.text import tokens, tokens_sql
 from aws_etl_global_footprint_network_spark.registry import register
 from aws_etl_global_footprint_network_spark.sources.readers import read_testdata, spread
+from aws_etl_global_footprint_network_spark.worker_imports import kernel
 
 # Support threshold: keep tokens occurring in >= 3% of the stream.
 # Integer-exact comparison (100 * count >= 3 * total) on both engines
@@ -94,6 +95,7 @@ def _mg_survivors_and_counts(token_stream: DataFrame, col: str) -> DataFrame:
     is a tokenize+explode of the corpus, so the third full pass was
     pure recompute of the other two."""
 
+    @kernel
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counters: dict[str, int] = {}
         n = 0

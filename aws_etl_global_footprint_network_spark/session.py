@@ -14,6 +14,24 @@ from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "aws_etl_global_footprint_network_spark"
 
+# The directory holding the package: Python workers need it on their
+# path to unpickle engine kernels, whatever the driver's cwd.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _worker_pythonpath(caller: str | None) -> str:
+    """``caller``'s PYTHONPATH with the package root appended once."""
+    parts = [p for p in (caller or "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in parts:
+        parts.append(_PACKAGE_ROOT)
+    return os.pathsep.join(parts)
+
+
+def _usable_cpus() -> int:
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
 
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
@@ -28,7 +46,9 @@ def get_spark(
     runtime, so ``shuffle_partitions`` is only the pre-AQE upper
     bound for the first stage.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # Default to the cores this process may run on, not a fixed count:
+    # local[N] starts up to N Python workers at once.
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_usable_cpus())
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
@@ -96,9 +116,14 @@ def get_spark(
         # DuckDB applies.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    extra_conf = dict(extra_conf or {})
+    # Local workers get PYTHONPATH from here (merged after pyspark's own
+    # entries); a cluster would ship the package with --py-files instead.
+    extra_conf["spark.executorEnv.PYTHONPATH"] = _worker_pythonpath(
+        extra_conf.get("spark.executorEnv.PYTHONPATH")
+    )
+    for k, v in extra_conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -27,6 +27,7 @@ from aws_etl_global_footprint_network_spark.sources.readers import (
     read_testdata,
     read_testdata_raw,
 )
+from aws_etl_global_footprint_network_spark.worker_imports import kernel
 
 
 # Stateful-stream shuffle (= state store) partition count for the
@@ -407,6 +408,7 @@ def streaming_first_seen_stateful(spark: SparkSession, sf_dir: str) -> DataFrame
     n_buckets = max(STREAM_STATE_PARTITIONS, n_rows // (2 * BUCKET_ROWS))
     _KEY = ["user_id", "event_type"]
 
+    @kernel
     def update(key, pdfs, state: GroupState):
         held = pickle.loads(state.get[0]) if state.exists else None
         batch = pd.concat(list(pdfs), ignore_index=True)
@@ -605,6 +607,7 @@ def streaming_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFram
         np.add.at(cs, inv, c)
         return uu, ns, cs
 
+    @kernel
     def update(key, pdfs, state: GroupState):
         batch = pd.concat(list(pdfs), ignore_index=True)
         u = batch["user_id"].to_numpy(dtype="float64", na_value=np.nan)
